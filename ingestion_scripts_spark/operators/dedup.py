@@ -27,7 +27,7 @@ Scale notes:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from ..functions.lits import bigint_array
 
@@ -1004,23 +1004,42 @@ def connected_components_star(
     """
     from .graph import symmetrize_distinct
 
+    def checkpoint_counted(df: DataFrame) -> tuple[DataFrame, int]:
+        # the edge count rides on the checkpoint's own job: the eager
+        # localCheckpoint fills the observation, so the count is not a
+        # second pass over the checkpointed edges
+        obs = Observation()
+        df = iterative_checkpoint(df.observe(obs, F.count(F.lit(1)).alias("n")))
+        return df, obs.get["n"]
+
     e = pairs.select(
         F.col(src).cast("bigint").alias("a"), F.col(dst).cast("bigint").alias("b")
     )
     # undirected, no self-loops: canonical-pair distinct + disjoint
     # orientation union (E rows through the seed shuffle, not 2E)
-    edges = iterative_checkpoint(symmetrize_distinct(e))
-    all_nodes = iterative_checkpoint(
-        edges.select(F.col("a").alias("node")).distinct()
-    )
+    edges, prev_cnt = checkpoint_counted(symmetrize_distinct(e))
+    converged = prev_cnt == 0
+    rounds = 0
+    # max_iter diameter-halving rounds, plus one that can only confirm the
+    # fixpoint: a graph that converges at round max_iter is seen converged
+    # one round later
+    for _ in range(max_iter + 1):
+        if converged:
+            break
+        rounds += 1
+        # ONE localCheckpoint per round: every intermediate below is a few
+        # shuffles downstream of the previous round's checkpoint, so lineage
+        # stays bounded, and each extra checkpoint is a fixed job cost that
+        # dominates small graphs (measured: 5 checkpoints per round ~2.5x
+        # slower; 2 rounds per checkpoint plus a confirmation round ~3x
+        # slower on the curation_dedup benchmark)
 
-    def _star_round(e: DataFrame) -> DataFrame:
         # large-star: for each u, m = min(N(u) ∪ {u}); emit (v, m) for v in N(u), v > u
-        nbr_min = e.groupBy("a").agg(
+        nbr_min = edges.groupBy("a").agg(
             F.least(F.min("b"), F.first("a")).alias("m")
         )
         large = (
-            e.join(nbr_min, "a")
+            edges.join(nbr_min, "a")
             .filter(F.col("b") > F.col("a"))
             .select(F.col("b").alias("a"), F.col("m").alias("b"))
             .filter(F.col("a") != F.col("b"))
@@ -1037,84 +1056,43 @@ def connected_components_star(
             .select(F.col("b").alias("a"), F.col("m").alias("b"))
             .union(m_small.select(F.col("a"), F.col("m").alias("b")))
         )
-        return symmetrize_distinct(small)
+        new_und, new_cnt = checkpoint_counted(symmetrize_distinct(small))
 
-    prev_cnt = edges.count()
-    converged = prev_cnt == 0
-    rounds_done = 0
-    # +2 detection slack: the windowed equality test sees a fixpoint
-    # reached at round R only at the next window boundary (≤ R+2), where
-    # the old per-round test saw it at R+1 — without the slack a graph
-    # converging at exactly round max_iter-1 would spuriously hit the
-    # unconverged error. Progress rounds are still bounded by max_iter's
-    # diameter-halving law; the confirmation round is verification, not
-    # progress, and is not budget-counted.
-    while rounds_done < max_iter + 2 and not converged:
-        # TWO rounds per localCheckpoint (optimization r15, §5 job count):
-        # the per-checkpoint fixed job cost dominated small-graph rounds
-        # (same measurement that rejected 5 checkpoints/round at ~2.5x),
-        # and two rounds keep lineage at 4 keyed shuffles off the previous
-        # checkpoint — still bounded. Convergence stays UNCONDITIONAL:
-        # E_{k+2} == E_k only *suggests* a fixpoint (it cannot distinguish
-        # one from a period-2 cycle of the round map by itself), so the
-        # suggestion is CONFIRMED by applying one more literal round and
-        # checking R(E) == E — the definition of the fixpoint, no appeal
-        # to the Kiveris potential argument. A genuine 2-cycle (none is
-        # believed to exist) would fail confirmation, keep looping, and
-        # hit the loud max_iter error — never silent wrong labels.
-        steps = min(2, max_iter + 2 - rounds_done)
-        cur = edges
-        for _ in range(steps):
-            cur = _star_round(cur)
-        new_und = iterative_checkpoint(cur)
-        rounds_done += steps
-
-        # Fixed-point convergence: stop when the window changed nothing.
+        # Fixed-point convergence: stop when the round changed nothing.
         # Both sides are DISTINCT undirected edge sets, so set equality is
         # |A|==|B| plus one empty difference — exact, no shape heuristics.
         # (An earlier star-shape predicate mis-flagged every hub→leaf edge
         # of a finished star, so the loop silently ran all max_iter rounds.)
-        new_cnt = new_und.count()
-        same = new_cnt == prev_cnt and (
+        converged = new_cnt == prev_cnt and (
             new_und.exceptAll(edges).limit(1).count() == 0
         )
-        # the previous window's checkpoint has no consumers past the
+        # the previous round's checkpoint has no consumers past the
         # convergence check above — release its blocks NOW, or ~log(D)
         # dead edge sets accumulate in the BlockManager (measured: OOM at
         # 16M edges / 8 GiB heap, r10 scale probe; caching.py docstring)
         release_local_checkpoint(edges)
         edges = new_und
         prev_cnt = new_cnt
-        if same and steps == 2:
-            # confirmation round: E_{k+2} == E_k with two rounds inside the
-            # window — verify the fixpoint directly (R(E) == E)
-            conf = iterative_checkpoint(_star_round(edges))
-            conf_cnt = conf.count()
-            confirmed = conf_cnt == prev_cnt and (
-                conf.exceptAll(edges).limit(1).count() == 0
-            )
-            release_local_checkpoint(edges)
-            edges = conf
-            prev_cnt = conf_cnt
-            converged = confirmed
-        elif same:
-            # single-round window: E_{k+1} == E_k IS the fixpoint test
-            converged = True
 
     if not converged:
         raise RuntimeError(
-            "connected_components_star did not reach a fixed point in "
-            f"{max_iter} rounds; raise max_iter (diameter halves per round, "
-            "so this needs a graph of diameter > 2^max_iter)"
+            "connected_components_star did not reach a fixed point after "
+            f"{rounds} rounds (max_iter={max_iter}, plus 1 round to confirm "
+            "the fixpoint); raise max_iter (diameter halves per round, so "
+            "this needs a graph of diameter > 2^max_iter)"
         )
 
-    comp = edges.groupBy("a").agg(F.min("b").alias("m")).select(
+    # No round loses a node, so the final groupBy covers every node of
+    # ``pairs`` without a join back to a seed node set. Large-star: a node
+    # v with a smaller neighbor u gets (v, m(u)), and v != m(u) because
+    # m(u) <= u < v; a local minimum u gets (w, u) from its own large-star
+    # for each larger neighbor w. Small-star: a node u with a smaller
+    # neighbor gets (u, m(u)); a local minimum x below a neighbor y gets
+    # (x, m(y)), or keeps (y, x) when m(y) == x. A node whose only edges
+    # are self-loops is never in the seed edge set.
+    return edges.groupBy("a").agg(F.min("b").alias("m")).select(
         F.col("a").alias("node"),
         F.least(F.col("a"), F.col("m")).alias("comp"),
-    )
-    return (
-        all_nodes.join(comp, "node", "left")
-        .select("node", F.coalesce(F.col("comp"), F.col("node")).alias("comp"))
     )
 
 

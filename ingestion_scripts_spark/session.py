@@ -39,9 +39,10 @@ def build_session(
         # let the planner pick shuffled-hash over sort-merge when its size
         # conditions hold, and let AQE rewrite SMJ→SHJ at runtime when every
         # post-shuffle partition is under 64 MiB (guide §3.1/§9; optimization
-        # r15). Scale-safe by construction: both paths only fire when the
-        # build side is provably small per partition, so the SHJ OOM risk
-        # sort-merge exists to avoid stays bounded at any corpus size.
+        # r15). The AQE path acts on measured post-shuffle sizes, so its
+        # build side is small per partition; the static path relies on
+        # Catalyst's size estimates, which stale or missing stats can make
+        # wrong, so its SHJ OOM bound is only as good as those estimates.
         # Adopted from a full-bench interleaved A/B (292 queries, per-query
         # warmup, reps=2): geomean 0.978, 103 wins / 58 losses, the largest
         # being the iterative join-heavy er_canonical_entities 10.2→8.2 s;

@@ -346,7 +346,10 @@ def stream_state_partitions(
     ``paths`` are the stream's source files/directories (the registry
     harnesses write their replay sources to scratch dirs, so the bytes are
     on local disk and the walk is metadata-only — no Spark job). Hidden/
-    metadata files (``_SUCCESS``, ``.crc``) are excluded.
+    metadata files (``_SUCCESS``, ``.crc``) are excluded. A path the walk
+    cannot size — a non-local scheme (``s3://``, ``hdfs://``; ``file://``
+    is local) or a path that does not exist — returns the cap: read as 0
+    bytes it would pin 1 partition into the stream's checkpoint for life.
 
     Scale shape: at bench SFs inputs are KB-MB → 1 partition (per-trigger
     work is milliseconds; parallelism buys nothing and 32x state-store
@@ -357,9 +360,18 @@ def stream_state_partitions(
     """
     import math
     import os
+    import re
 
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_bytes = 0
     for p in paths:
+        scheme = re.match(r"([A-Za-z][A-Za-z0-9+.-]*)://", p)
+        if scheme and scheme.group(1).lower() == "file":
+            p = p[scheme.end():]
+        elif scheme:
+            return cap
+        if not os.path.exists(p):
+            return cap
         if os.path.isfile(p):
             n_bytes += os.path.getsize(p)
             continue
@@ -369,7 +381,6 @@ def stream_state_partitions(
                 for f in files
                 if not f.startswith((".", "_"))
             )
-    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     return max(1, min(cap, math.ceil(n_bytes / target_bytes)))
 
 

@@ -331,8 +331,8 @@ def test_iterative_cc_releases_round_checkpoints(spark):
     """r10 scale-probe OOM class: per-round localCheckpoints must not
     accumulate in the BlockManager. After a multi-round alternating-star
     run, at most a constant handful of persistent RDDs may remain (the
-    final edges + all_nodes + whatever other suites left around) — one
-    per ROUND is the leak this pins."""
+    final round's edges + whatever other suites left around) — one per
+    ROUND is the leak this pins."""
     from pyspark.sql import functions as F
 
     from ingestion_scripts_spark.operators.dedup import connected_components_star

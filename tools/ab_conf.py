@@ -97,16 +97,20 @@ def main() -> None:
     ratios = []
     tot_a = tot_b = 0.0
     for name in names:
-        # per-query warmup under arm-A confs (r15 fix): the FIRST-ever run
-        # of a query pays plan codegen + JIT that no later run pays, and
-        # the alternation order (A,B / B,A) put that cold run in arm A for
-        # every query — the first full-bench A/B read geomean 0.85 from
-        # cold-start bias alone (warm-only re-analysis: 1.00). One untimed
-        # run before the timed alternation removes the bias for both arms.
-        set_arm(False)
-        spark.sparkContext.setJobDescription(f"ab:{name}:warmup")
-        qs[name](spark, sf_dir).collect()
-        release_caches()
+        # per-query warmup under BOTH arms, A then B: the FIRST run of a
+        # query under a given conf pays plan codegen + JIT that no later run
+        # pays, and the alternation order (A,B / B,A) put that cold run in
+        # arm A for every query — the first full-bench A/B read geomean
+        # 0.85 from cold-start bias alone (warm-only re-analysis: 1.00). A
+        # conf that changes the physical plan makes arm B's first run cold
+        # too, so each arm gets one untimed run before the timed alternation.
+        for arm_b in (False, True):
+            set_arm(arm_b)
+            spark.sparkContext.setJobDescription(
+                f"ab:{name}:warmup:{'B' if arm_b else 'A'}"
+            )
+            qs[name](spark, sf_dir).collect()
+            release_caches()
         ta, tb = [], []
         for r in range(reps):
             order = (False, True) if r % 2 == 0 else (True, False)

@@ -7,9 +7,9 @@ persistent RDDs in the BlockManager.
 Pass criteria (printed as one JSON line):
 - completes without OOM on the 8 GiB heap (the r10 leak OOMed 8 GiB at
   16M edges / ~10 rounds — 64M x 20 rounds is ~8x that block volume);
-- peak_rdds - baseline_rdds <= 4: at any instant the loop may hold the
-  symmetrized input, all_nodes, the current round's checkpoint and the
-  next one mid-swap — the GENERATION-LAG bound; one-per-round growth is
+- peak_rdds - baseline_rdds <= 4: at any instant the loop holds at most
+  the current round's checkpoint (the symmetrized input before round 1)
+  and the next one mid-swap — the GENERATION-LAG bound; one-per-round growth is
   the leak this pins (tests/test_r11_checkpoint_generation.py carries the in-suite
   generation-bounded twin on a small graph).
 
