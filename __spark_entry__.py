@@ -20,20 +20,65 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from ingestion_scripts_spark import oracle as O
-from ingestion_scripts_spark.caching import persist_tracked
-from ingestion_scripts_spark.functions import sentiment as S
-from ingestion_scripts_spark.functions import text as X
-from ingestion_scripts_spark.functions import timefns as TF
-from ingestion_scripts_spark.operators import dedup as D
-from ingestion_scripts_spark.operators import keywords as K
-from ingestion_scripts_spark.operators import similarity as SIM
-from ingestion_scripts_spark.operators import text_analysis as TA
 
-from ingestion_scripts_spark.registry.part14 import *  # noqa: E402,F401,F403
+from ingestion_scripts_spark.registry.part01 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part02 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part03 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part04 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part05 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part06 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part07 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part08 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part09 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part10 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part11 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part12 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part13 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part14 import *  # noqa: F401,F403
+
+# ``import *`` skips underscore names: the oracle builders ``_REGISTRY``
+# calls, grouped by the part that defines them.
+from ingestion_scripts_spark.registry.part01 import (
+    _sql_ann_recall, _sql_cross_split_contamination, _sql_ivf_ann, _sql_ivf_ann_mp,
+    _sql_ivf_trained, _sql_lsh_ann,
+)
+from ingestion_scripts_spark.registry.part02 import (
+    _sql_dataset_card, _sql_hll, _sql_hll_merge_rollup, _sql_kmeans_clusters,
+    _sql_kmeans_sample, _sql_langid_confusion, _sql_simhash_pairs, _sql_zorder_layout,
+)
+from ingestion_scripts_spark.registry.part03 import (
+    _SQL_DOC_CHUNKS, _sql_bigram_backoff, _sql_bloom_gate, _sql_bpe_merges,
+    _sql_bpe_tokenize, _sql_cms_heavy_hitters, _sql_column_profile, _sql_custom_feed,
+    _sql_dataset_split, _sql_domain_caps, _sql_gopher_rules, _sql_hist_quantiles,
+    _sql_priority_sample, _sql_semdedup, _sql_stream_custom_feed, _sql_unigram_ppl,
+)
+from ingestion_scripts_spark.registry.part05 import (
+    _sql_covariance_matrix, _sql_heavy_hitter_recall, _sql_holt_trend_forecast,
+    _sql_hybrid_rank_fusion, _sql_jl_projection_recall, _sql_leakage_safe_split,
+    _sql_mmr_diverse_topk, _sql_textrank_summary,
+)
+from ingestion_scripts_spark.registry.part06 import (
+    _sql_calibration_bins, _sql_cohens_kappa, _sql_dp_count_laplace, _sql_hits_scores,
+    _sql_kcenter_coreset, _sql_kcore_parts, _sql_kneser_ney_ppl,
+)
+from ingestion_scripts_spark.registry.part07 import (
+    _sql_dedup_funnel, _sql_isotonic_calibration, _sql_max_coverage, _sql_ndcg_quality,
+    _sql_ppr_coorder, _sql_pq_recall, _sql_source_unique_vocab, _sql_zipf_slope,
+)
+from ingestion_scripts_spark.registry.part08 import (
+    _sql_brier_score, _sql_decile_lift, _sql_kmv_click_purchase, _sql_kmv_distinct,
+    _sql_negative_sampling, _sql_rbo_vocab, _sql_stream_kmv,
+)
+from ingestion_scripts_spark.registry.part09 import _sql_vocab_richness
+from ingestion_scripts_spark.registry.part10 import (
+    _sql_bootstrap_order_value_ci, _sql_shuffle_mix_audit,
+)
+from ingestion_scripts_spark.registry.part14 import (
+    _sql_ivf_postings_roll, _sql_ivf_roll_serve, _sql_stream_ivf_roll,
+)
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -269,15 +269,6 @@ def sql_dot(a: str, b: str, dim_expr: str) -> str:
     return f"list_sum(list_transform(range(1, {dim_expr} + 1), i -> {a}[i] * {b}[i]))"
 
 
-def sql_cosine(a: str, b: str) -> str:
-    """Cosine with the same sequential-fold shape as operators.similarity."""
-    dim = f"len({a})"
-    dot = sql_dot(a, b, dim)
-    na = f"sqrt(list_sum(list_transform(range(1, len({a}) + 1), i -> {a}[i] * {a}[i])))"
-    nb = f"sqrt(list_sum(list_transform(range(1, len({b}) + 1), i -> {b}[i] * {b}[i])))"
-    return f"({dot}) / (({na}) * ({nb}))"
-
-
 def sql_lsh_bucket(v: str, planes: list[list[float]]) -> str:
     """= operators.similarity.lsh_bucket with the SAME deterministic
     hyperplanes embedded as list literals."""

@@ -1,2 +1,4 @@
-"""Mechanically split registry implementation for ``__spark_entry__``;
-import the front door, not these parts (order-sensitive chain)."""
+"""The query registry behind ``__spark_entry__``, split into parts.
+
+Each part imports what it uses; the front door imports every part.
+Import ``__spark_entry__``, not these parts."""

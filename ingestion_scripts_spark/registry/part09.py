@@ -3,9 +3,8 @@ order statistics + Pareto top-share curve (global_rank consumers #2/#3),
 Mann-Kendall trend test, degree assortativity, functional-dependency
 strength, exact weighted medians, market concentration (HHI/CR4),
 seasonal-naive MASE, largest-remainder budget apportionment, and Chao1
-vocabulary richness. Chained after part08: explicit head imports,
-``import *`` from the previous part, and a cumulative ``__all__`` so the
-front door's single ``import *`` sees everything."""
+vocabulary richness. Each part imports what it uses; the front door
+imports every part."""
 
 from __future__ import annotations
 
@@ -14,8 +13,7 @@ from pyspark.sql import functions as F
 
 from ingestion_scripts_spark import oracle as O
 from ingestion_scripts_spark.functions import text as X
-from ingestion_scripts_spark.registry import part08 as _prev  # noqa: F401
-from ingestion_scripts_spark.registry.part08 import *  # noqa: F401,F403
+from ingestion_scripts_spark.registry.part01 import _t
 
 
 # ---------------------------------------------------------------------------
@@ -72,11 +70,6 @@ FROM ranked JOIN ranks ON ranked.rn = ranks.r
 ORDER BY q_num, q_den"""
 
 
-__all__ = list(_prev.__all__) + [  # noqa: PLE0605
-    "q_exact_global_quantiles", "SQL_EXACT_GLOBAL_QUANTILES",
-]
-
-
 # ---------------------------------------------------------------------------
 # Mann-Kendall trend test on the daily order-count series
 # ---------------------------------------------------------------------------
@@ -128,11 +121,6 @@ SELECT n_points, s_stat, var18,
               / sqrt(var18::DOUBLE / 18.0) * 1000000.0 + 0.5) AS BIGINT)
        END AS z_micro
 FROM base"""
-
-
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_mann_kendall_daily", "SQL_MANN_KENDALL_DAILY",
-]
 
 
 # ---------------------------------------------------------------------------
@@ -189,11 +177,6 @@ SELECT m2, sx, sxx, sxy,
 FROM mo"""
 
 
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_degree_assortativity", "SQL_DEGREE_ASSORTATIVITY",
-]
-
-
 # ---------------------------------------------------------------------------
 # functional-dependency strength profile
 # ---------------------------------------------------------------------------
@@ -234,10 +217,6 @@ SQL_FD_STRENGTH = " UNION ALL ".join(
     _sql_fd_pair(det, dep) for det, dep in _FD_PAIRS
 )
 
-
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_fd_strength", "SQL_FD_STRENGTH", "_sql_fd_pair",
-]
 
 # ---------------------------------------------------------------------------
 # top-fraction concentration curve (global_rank consumer #3)
@@ -293,11 +272,6 @@ GROUP BY f_num, f_den, k, total_value
 ORDER BY f_num, f_den"""
 
 
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_top_share_curve", "SQL_TOP_SHARE_CURVE",
-]
-
-
 # ---------------------------------------------------------------------------
 # exact weighted median per part
 # ---------------------------------------------------------------------------
@@ -345,11 +319,6 @@ SELECT l_partkey, CAST(max(w_total) AS BIGINT) AS w_total,
        CAST(min(v) AS BIGINT) AS median_v
 FROM scored WHERE 2 * cum >= w_total
 GROUP BY l_partkey ORDER BY l_partkey"""
-
-
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_weighted_median_parts", "SQL_WEIGHTED_MEDIAN_PARTS",
-]
 
 
 # ---------------------------------------------------------------------------
@@ -405,10 +374,6 @@ SELECT mkt AS market,
 FROM ranked GROUP BY mkt ORDER BY market"""
 
 
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_market_concentration", "SQL_MARKET_CONCENTRATION",
-]
-
 # ---------------------------------------------------------------------------
 # seasonal-naive MASE backtest on daily revenue
 # ---------------------------------------------------------------------------
@@ -461,13 +426,6 @@ SELECT n_points, sum_abs_e1, sum_abs_es,
 FROM agg"""
 
 
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_forecast_mase", "SQL_FORECAST_MASE",
-]
-
-
-
-
 # ---------------------------------------------------------------------------
 # largest-remainder sample-budget apportionment across sources
 # ---------------------------------------------------------------------------
@@ -511,10 +469,6 @@ SELECT k AS source, cnt, base_alloc,
 FROM ranked, leftover ORDER BY source"""
 
 
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_sample_apportionment", "SQL_SAMPLE_APPORTIONMENT",
-]
-
 # ---------------------------------------------------------------------------
 # Chao1 / Good-Turing vocabulary richness
 # ---------------------------------------------------------------------------
@@ -555,8 +509,3 @@ SELECT v_obs, n_tokens, f1, f2,
        END AS chao1_est,
        CAST(1000000 - (f1 * 1000000) // n_tokens AS BIGINT) AS coverage_ppm
 FROM agg"""
-
-
-__all__ = __all__ + [  # noqa: F405,PLE0605
-    "q_vocab_richness", "_sql_vocab_richness",
-]

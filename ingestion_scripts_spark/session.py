@@ -67,6 +67,3 @@ def build_session(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def testdata_dir(sf: str = "0.001") -> str:
-    return os.environ.get("SPARK_GRAFT_SF_DIR", f"/root/testdata/sf{sf}")

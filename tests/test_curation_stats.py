@@ -77,8 +77,10 @@ def test_hist_quantile_error_bounded_by_bin_width(spark):
 
     import pyspark.sql.functions as F
 
+    from ingestion_scripts_spark.sources.readers import load_table
+
     rows = E.queries()["hist_quantiles"](spark, SF).collect()
-    ev = E.queries.__globals__["_t"](spark, SF, "events")
+    ev = load_table(spark, SF, "events")
     vals = {
         r.event_type: sorted(r.vs)
         for r in ev.groupBy("event_type")
